@@ -296,7 +296,7 @@ def _solve_driver(rows) -> dict:
 def connected_components(
     edges: DataFrame, max_iter: int = 20, checkpoint: bool = True,
     accelerate: bool = True, local_contract: bool = True,
-    driver_solve_max: int = 200_000,
+    driver_solve_max: int = 200_000, ckpts: list | None = None,
 ) -> DataFrame:
     """edges(norm_a, norm_b) -> labels(norm, component) for every node
     that appears in an edge; component = min member of the component.
@@ -326,6 +326,10 @@ def connected_components(
     bound as a sort buffer); pass local_contract=False to fall back to
     the pure-shuffle loop.
 
+    ``ckpts``: the contraction checkpoint the returned plan reads is
+    appended here when given, so the caller can free it by RDD id once
+    the labels are committed (the materialize._ckpt convention).
+
     Callers union in singleton nodes afterwards (materialize.py)."""
     e = (
         edges.select(F.col("norm_a").alias("src"), F.col("norm_b").alias("dst"))
@@ -343,6 +347,8 @@ def connected_components(
         .agg(F.min("root").alias("root"), F.collect_set("root").alias("_roots"))
         .localCheckpoint(eager=True)
     )
+    if ckpts is not None:
+        ckpts.append(g)
     ce = (
         g.filter(F.size("_roots") > 1)
         .select(F.col("root").alias("src"), F.explode("_roots").alias("dst"))
@@ -382,6 +388,7 @@ def incremental_components(
     new_edges: DataFrame,
     max_iter: int = 20,
     accelerate: bool = True,
+    ckpts: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Re-label ONLY the components a new edge batch touches — the
     incremental-ingest analog of connected_components: at a daily-ingest
@@ -408,7 +415,10 @@ def incremental_components(
     touched component is fully present in the subgraph, so its new
     min-label is the global min; an untouched component has no new edge
     by definition, so its label set is already converged
-    (fuzz-pinned in tests against the full recompute)."""
+    (fuzz-pinned in tests against the full recompute).
+
+    ``ckpts`` collects ``touched`` and CC's contraction checkpoint for
+    the caller to free, as in connected_components."""
     new_e = (
         new_edges.select(F.col("norm_a"), F.col("norm_b"))
         .filter(F.col("norm_a") != F.col("norm_b"))
@@ -428,6 +438,8 @@ def incremental_components(
         # set instead of three re-derivations over old_labels
         .localCheckpoint(eager=True)
     )
+    if ckpts is not None:
+        ckpts.append(touched)
     sub_old = (
         old_edges.select("norm_a", "norm_b")
         .join(
@@ -437,7 +449,7 @@ def incremental_components(
         .select("norm_a", "norm_b")
     )
     sub_labels = connected_components(
-        sub_old.union(new_e), max_iter, accelerate=accelerate
+        sub_old.union(new_e), max_iter, accelerate=accelerate, ckpts=ckpts
     )
     keep = old_labels.join(touched, "component", "left_anti")
     return keep.unionByName(sub_labels), touched

@@ -1,12 +1,12 @@
 """B4: the vectorized mention-detection + triple-extraction stage.
 
-This is the ONE custom pandas-UDF stage of the pipeline (SURVEY.md §2B),
+This is the ONE custom Python-UDF stage of the pipeline (SURVEY.md §2B),
 the analog of the reference's per-section LLM loop fused with its JSON
 parse, empty filter, and tabulation (A14/A16/A17/A18/A19 —
 /root/reference/gondar/modules/PubMedFlow.py:233-251). Differences by
 design:
 
-  * partition-parallel ``mapInPandas`` over Arrow micro-batches instead of
+  * partition-parallel ``mapInArrow`` over Arrow record batches instead of
     a sequential driver loop — the extractor is invoked once per batch
     ("no per-row Python", /root/repo/BASELINE.json:15);
   * deterministic extractor (extraction.spec) replaces the LLM pinned to

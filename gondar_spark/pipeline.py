@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
+from .errors import StageError
 from .operators import (
     blocking, cc, chunk, extract, identity, materialize, normalize, source,
 )
@@ -60,12 +61,16 @@ class Pipeline:
         return df
 
     def _free_ckpts(self) -> None:
+        """Free the registered checkpoints by RDD id: DataFrame.unpersist
+        does not release localCheckpoint storage (see operators/cc.py)."""
+        ids: set[int] = set()
         for df in self._ckpts:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped, block gone, ...
-                pass
+            ids |= cc._checkpoint_rdd_ids(df)
         self._ckpts.clear()
+        try:
+            cc._unpersist_rdd_ids(self.spark.sparkContext, ids)
+        except Exception:  # session already stopped, ...
+            pass
 
     # ---- lineage ----------------------------------------------------------
     def _log(self, stage: str, **fields) -> None:
@@ -105,11 +110,13 @@ class Pipeline:
         ``parallel`` overlaps the independent table writes from a small
         driver thread pool (guide §2.6: actions are only sequential
         because the driver calls them sequentially) — one write's task
-        tail back-fills with the next write's tasks. Safe ONLY when the
-        table plans read committed/checkpointed inputs: plans sharing an
-        un-materialized persist would race to populate the cache and
-        re-run the expensive upstream (the extract-once contract), so
-        the extraction stage stays sequential."""
+        tail back-fills with the next write's tasks, and each write keeps
+        its own atomic commit. Safe ONLY when the table plans read
+        committed, checkpointed or already-populated persisted inputs:
+        plans sharing an un-materialized persist would race to populate
+        the cache and re-run the expensive upstream (the extract-once
+        contract), so callers run one action over a shared persist first
+        (the extraction and edges stages do)."""
         if not force and all(self.io.exists(t) for t in tables):
             self._log(name, skipped=True)
             return False
@@ -289,7 +296,7 @@ class Pipeline:
             """Returns (triples, quarantine, metrics, raw). ``raw`` is
             PERSISTED: the three outputs are filters over one extraction
             plan, and without the persist each table write re-runs the
-            whole mapInPandas extraction — 3x the expensive operator per
+            whole mapInArrow extraction — 3x the expensive operator per
             stage (on the LLM path, 3x the endpoint bill). The caller
             unpersists raw once its outputs are materialized."""
             todo = base_src
@@ -497,9 +504,15 @@ class Pipeline:
                 tables["link_bands"] = blocks.withColumn(
                     "_bp", blocking.band_prefix())
                 pb = {"link_signatures": ["_np"], "link_bands": ["_bp"]}
+                # all three table plans read sig: populate its cache with
+                # ONE action so the overlapped writes below never race to
+                # fill it (the _extract_all pattern); sizes feeds only
+                # the edges plan
+                sig.count()
             try:
                 executed["edges"] = self._run_stage(
-                    "edges", tables, partition_by=pb, force=True)
+                    "edges", tables, partition_by=pb, force=True,
+                    parallel=True)
                 n_mega = sizes.filter(
                     F.col("_bs") > cfg.max_block_size).count()
                 if n_mega:
@@ -516,7 +529,8 @@ class Pipeline:
         # stage 5: connected components (B9)
         executed["labels"] = self._run_stage_lazy(
             "labels",
-            lambda: {"labels": cc.connected_components(edges, cfg.cc_max_iter)},
+            lambda: {"labels": cc.connected_components(
+                edges, cfg.cc_max_iter, ckpts=self._ckpts)},
             force=force,
         )
         labels = self.io.read("labels")
@@ -813,16 +827,24 @@ class Pipeline:
         keys = self._LINK_KEYS
         t0 = time.time()
         missing = [t for t in ("extract_done", "link_signatures",
-                               "entity_ids")
+                               "link_bands", "entity_ids")
                    if not io.exists(t)]
         if missing:
-            from .errors import StageError
-
             raise StageError(
                 "retract() needs the committed link state "
                 f"(missing: {missing}); build the warehouse with "
                 "JobConfig(durable_link_state=True) or run(incremental="
                 "True) — one-shot builds skip those commits by design"
+            )
+        # the store rewrites below keep the prefix-partitioned layout;
+        # an unpartitioned signature store (older warehouse) would be
+        # re-committed in a shape later probes cannot prune — refuse
+        # before any compaction commits
+        if "_np" not in io.read("link_signatures").columns:
+            raise StageError(
+                "retract() needs the prefix-partitioned link store "
+                "(link_signatures has no _np column); rebuild the link "
+                "state with run(force=True) on a durable config first"
             )
         if source_df is None:
             if source_path is None:
@@ -895,7 +917,8 @@ class Pipeline:
             .join(B(touched), "component", "left_semi")
             .select("norm_a", "norm_b")
         )
-        relabeled = cc.connected_components(sub, cfg.cc_max_iter)
+        relabeled = cc.connected_components(sub, cfg.cc_max_iter,
+                                            ckpts=self._ckpts)
         labels_out = (
             old_labels.join(B(touched), "component", "left_anti")
             .unionByName(relabeled)
@@ -914,12 +937,11 @@ class Pipeline:
                 io.read("link_signatures").join(B(dead), "norm", "left_anti"),
                 meta=meta, partition_by=["_np"]),
             lambda: io.compact("edges", edges_out, meta=meta),
-        ]
-        if io.exists("link_bands"):
-            link_rewrites.append(lambda: io.compact(
+            lambda: io.compact(
                 "link_bands",
                 io.read("link_bands").join(B(dead), "norm", "left_anti"),
-                meta=meta, partition_by=["_bp"]))
+                meta=meta, partition_by=["_bp"]),
+        ]
         self._overlap(link_rewrites)
         io.write(labels_out, "labels", meta={
             **meta, "edge_segments": io.segments("edges")})
@@ -1189,7 +1211,8 @@ class Pipeline:
             all_edges = io.read("edges")  # post-append: duplicates with
             # cc_input are deduped inside incremental CC's distinct
             labels_new, touched = cc.incremental_components(
-                old_labels, all_edges, cc_input, cfg.cc_max_iter)
+                old_labels, all_edges, cc_input, cfg.cc_max_iter,
+                ckpts=self._ckpts)
             n_touched = touched.count()
             # the labels write reads the old snapshot while staging to a
             # tmp dir; the atomic swap happens only after the read ran.

@@ -150,3 +150,22 @@ def test_durable_knob_outputs_identical(spark, tmp_path):
         a = fast.io.read(t).select(*cols)
         b = durable.io.read(t).select(*cols)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+
+
+def test_run_frees_its_checkpoints(spark, tmp_path):
+    """A durable run leaves the session's persistent-RDD set as it found
+    it: the pipeline's, materialize's and CC's localCheckpoints are freed
+    by RDD id at the end of run() (DataFrame.unpersist does not release
+    checkpoint storage), so a long-lived session does not accumulate
+    them."""
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent_ids()
+    pipe = Pipeline(spark, JobConfig(
+        warehouse=str(tmp_path / "wh"), run_id="ck",
+        durable_link_state=True))
+    pipe.run(source_df=generate_source_df(
+        spark, SynthConfig(n_files=40), partitions=4))
+    assert pipe.io.read("labels").count() > 0  # CC ran
+    assert persistent_ids() == before

@@ -159,3 +159,36 @@ def test_retract_crash_replay(spark, tmp_path):
 
     # a second retract with the same corpus is a clean no-op
     assert pipe.retract(source_df=remaining)["removed_files"] == 0
+
+
+def test_retract_refuses_unprefixed_link_store(spark, tmp_path):
+    """retract() rewrites the link store in its prefix-partitioned
+    layout; a warehouse whose link_signatures lacks the _np column, or
+    that has no link_bands, is refused with StageError before any table
+    is committed."""
+    from gondar_spark.errors import StageError
+
+    pipe = Pipeline(spark, JobConfig(
+        warehouse=str(tmp_path / "wh"), run_id="g",
+        durable_link_state=True))
+    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 12])))
+    io = pipe.io
+    io.write(io.read("link_signatures").drop("_np"), "link_signatures")
+    tables = ("extract_done", "link_done", "mentions", "edges", "labels",
+              "link_signatures", "link_bands", "triples", "entities",
+              "aliases", "triples_raw")
+
+    def commits():
+        return {t: (io.commit_meta(t) or {}).get("ts") for t in tables}
+
+    remaining = _src(spark, _win_files([0, 2, 12]))
+    before = commits()
+    with pytest.raises(StageError, match="_np"):
+        pipe.retract(source_df=remaining)
+    assert commits() == before
+
+    io.drop("link_bands")
+    before = commits()
+    with pytest.raises(StageError, match="link_bands"):
+        pipe.retract(source_df=remaining)
+    assert commits() == before

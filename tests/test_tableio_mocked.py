@@ -137,3 +137,27 @@ def test_footer_count_caps_at_max_files(tmp_path, monkeypatch):
     assert TableIO._count_from_footers(str(d)) == 10
     monkeypatch.setattr(TableIO, "MAX_FOOTER_FILES", 3)
     assert TableIO._count_from_footers(str(d)) is None  # capped, not wrong
+
+
+def test_partitioned_write_one_file_per_dir_over_many_tasks(spark, tmp_path):
+    """A partitioned parquet write clusters rows by the partition columns
+    into the session's shuffle-partition count of tasks: still exactly
+    one file per populated dir, but written by several tasks, not the
+    single task a coalesced shuffle leaves (which opens every dir's file
+    in a row)."""
+    from pyspark.sql import functions as F
+
+    from gondar_spark.sources.tables import TableIO
+
+    io = TableIO(spark, str(tmp_path / "wh"), use_iceberg=False)
+    df = spark.range(400).withColumn("p", (F.col("id") % 40).cast("string"))
+    assert io.write(df, "t", partition_by=["p"])["rows"] == 400
+    dirs = [d for d in (tmp_path / "wh" / "t").iterdir() if d.is_dir()]
+    assert len(dirs) == 40
+    tasks = set()
+    for d in dirs:
+        files = [f.name for f in d.iterdir() if f.name.endswith(".parquet")]
+        assert len(files) == 1, (d.name, files)
+        tasks.add(files[0].split("-")[1])  # part-NNNNN-<uuid>...
+    assert len(tasks) > 1, tasks
+    assert io.read("t").count() == 400
